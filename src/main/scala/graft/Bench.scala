@@ -1,6 +1,67 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  /** One query's outcome in one pass: its seconds, or the class of what it
+    * threw.
+    */
+  private[graft] type Outcome = Either[String, Double]
+
+  /** Per-query times and failures folded from all passes, with the sums
+    * the JSON reports. A query that threw in any pass is failed: it is
+    * listed under `failed` with the class of its first error and enters no
+    * time and no sum. Every other query reports its fastest pass.
+    */
+  private[graft] case class Summary(times: Map[String, Double],
+                                    failed: Map[String, String],
+                                    total: Double, comparableSec: Double,
+                                    symmetricSec: Double)
+
+  private[graft] def summarize(passes: Seq[Map[String, Outcome]],
+                               comparable: String => Boolean,
+                               asymmetric: Set[String]): Summary = {
+    val names = passes.flatMap(_.keys).distinct
+    val failed = names.flatMap(n =>
+      passes.flatMap(_.get(n)).collectFirst { case Left(cls) => n -> cls }).toMap
+    val times = names.filterNot(failed.contains)
+      .map(n => n -> passes.flatMap(_.get(n)).collect { case Right(t) => t }.min).toMap
+    val comp = times.filter { case (k, _) => comparable(k) }
+    Summary(times, failed, times.values.sum, comp.values.sum,
+            comp.collect { case (k, v) if !asymmetric(k) => v }.sum)
+  }
+
+  /** Work-asymmetric rows (BASELINE.md "Work asymmetry"): their oracles
+    * verify the RESULT relationally while the Spark side does categorically
+    * more work by design — compaction_roundtrip writes+rewrites+rereads a
+    * partitioned dataset where the twin runs one aggregate;
+    * stream_daily_parity boots a real micro-batch streaming execution
+    * where the twin is the batch aggregate. They stay in the primary
+    * ratio (they ARE catalog queries); vs_baseline_symmetric is the
+    * like-for-like diagnostic over the rows where both engines execute
+    * comparable plans.
+    */
+  private val asymmetric = Set("compaction_roundtrip", "glob_directory_scan", "stream_daily_parity",
+    "json_replay_roundtrip",
+    // real throttled micro-batch execution (3 triggers + checkpoint dir)
+    // vs a pure range() arithmetic twin
+    "throttled_stream_stats",
+    // real watermarked-dedup micro-batch execution vs a batch DISTINCT
+    "stream_dedup_parity",
+    // real flatMapGroupsWithState three-trigger execution vs closed-form
+    // CASE arithmetic
+    "stream_retry_parity",
+    // real two-data-trigger stream-stream interval-join execution (join
+    // state retained across micro-batches, plus the closing
+    // watermark-advance batch) vs a batch range-join twin
+    "stream_context_parity",
+    // real two-trigger session-window execution (sentinel watermark
+    // closure) vs a batch gaps-and-islands twin
+    "stream_session_parity",
+    // bucketed-table staging writes on first invocation; the twin never
+    // writes (steady-state reads are symmetric, the 3-pass min usually
+    // lands there, but the stage can be charged to pass 1 in a cold run)
+    "bucketed_join_counts")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -42,29 +103,31 @@ object Bench {
           n -> ((s: SparkSession, _: String) => s.range(1).toDF("id"))
         }
       else catalog
-    // returns per-query (seconds, succeeded)
     def once(qs: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
-             = selected): Map[String, (Double, Boolean)] = qs.map { case (name, fn) =>
+             = selected): Map[String, Outcome] = qs.map { case (name, fn) =>
       val t0 = System.nanoTime()
       // noop sink: every output column is fully computed (count() would let
       // Catalyst prune projection-only queries to a bare scan), no I/O cost.
-      val ok =
+      val failure =
         try {
           Tuning.withTuned(spark, name) {
             fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          }; true
-        } catch { case _: Throwable => false }
+          }; None
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          Some(e.getClass.getSimpleName)
+        }
       val dt = (System.nanoTime() - t0) / 1e9
       // isolate queries from each other: drop caches / localCheckpoint
       // blocks a query may have left behind (iterative ops checkpoint), so
       // later timings don't pay earlier queries' storage + GC pressure
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      name -> ((dt, ok))
+      name -> failure.toLeft(dt)
     }
-    // three passes, per-query minimum over *successful* runs: suppresses
-    // transient host noise without letting a fast failure masquerade as the
-    // best time; a query that fails every pass reports -1. Three, not two:
+    // three passes, per-query minimum (Summary): suppresses transient host
+    // noise; a query that throws in any pass is failed and enters no sum,
+    // so a fast failure never masquerades as a time. Three, not two:
     // the suite takes minutes end to end, and the bench host shows
     // multi-minute degradation windows — a stall that covers the same query
     // in two consecutive passes sticks in a 2-pass min (observed:
@@ -88,70 +151,32 @@ object Bench {
     val calibs = scala.collection.mutable.ArrayBuffer[Double]()
     val passes = Seq.fill(3) { calibs += calibOnce(); once() }
     calibs += calibOnce()
-    val multiPass = selected.keys.map { k =>
-      val ok = passes.map(_(k)).filter(_._2).map(_._1)
-      k -> (if (ok.isEmpty) -1.0 else ok.min)
-    }.toMap
     // Selective extra pass: when a query's best and worst still disagree
     // badly, a stall may cover all three — one targeted retry pins it.
     val noisy = selected.keySet.filter { k =>
-      val ts = passes.map(_(k)).filter(_._2).map(_._1)
-      ts.nonEmpty && ts.max > 1.5 * ts.min && ts.max > 1.0
+      val ts = passes.flatMap(_(k).toOption)
+      ts.size == passes.size && ts.max > 1.5 * ts.min && ts.max > 1.0
     }
-    val p4 = if (noisy.nonEmpty) once(selected.view.filterKeys(noisy).toMap) else Map.empty[String, (Double, Boolean)]
-    val results = multiPass.map { case (k, best) =>
-      k -> (p4.get(k) match {
-        case Some((t4, true)) if best >= 0 => math.min(best, t4)
-        case _ => best
-      })
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val p4 = if (noisy.nonEmpty) once(selected.view.filterKeys(noisy).toMap) else Map.empty[String, Outcome]
     // The DuckDB comparator covers exactly the oracle'd queries; catalog
     // entries without an oracle would have no denominator, so the headline
     // ratio is computed over the comparable subset and the rest is itemized.
     // (As of round 5 every catalog entry carries an oracle — the partition
     // is kept so a future non-SQL-expressible op degrades gracefully.)
+    val summary = summarize(passes :+ p4, SparkEntry.oracleSql.contains, asymmetric)
+    val results = summary.times
+    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val failedJson = summary.failed.map { case (k, c) => s"\"" + k + "\":\"" + c + "\"" }
+      .mkString("{", ",", "}")
+    val total = summary.total
+    val comparableSec = summary.comparableSec
     val (comparable, noncomparable) = results.partition {
       case (k, _) => SparkEntry.oracleSql.contains(k)
     }
-    val comparableSec = comparable.values.sum
     val noncompJson = noncomparable.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // Work-asymmetric rows (BASELINE.md "Work asymmetry"): their oracles
-    // verify the RESULT relationally while the Spark side does categorically
-    // more work by design — compaction_roundtrip writes+rewrites+rereads a
-    // partitioned dataset where the twin runs one aggregate;
-    // stream_daily_parity boots a real micro-batch streaming execution
-    // where the twin is the batch aggregate. They stay in the primary
-    // ratio (they ARE catalog queries); vs_baseline_symmetric is the
-    // like-for-like diagnostic over the rows where both engines execute
-    // comparable plans.
-    val asymmetric = Set("compaction_roundtrip", "glob_directory_scan", "stream_daily_parity",
-      "json_replay_roundtrip",
-      // real throttled micro-batch execution (3 triggers + checkpoint dir)
-      // vs a pure range() arithmetic twin
-      "throttled_stream_stats",
-      // real watermarked-dedup micro-batch execution vs a batch DISTINCT
-      "stream_dedup_parity",
-      // real flatMapGroupsWithState three-trigger execution vs closed-form
-      // CASE arithmetic
-      "stream_retry_parity",
-      // real two-data-trigger stream-stream interval-join execution (join
-      // state retained across micro-batches, plus the closing
-      // watermark-advance batch) vs a batch range-join twin
-      "stream_context_parity",
-      // real two-trigger session-window execution (sentinel watermark
-      // closure) vs a batch gaps-and-islands twin
-      "stream_session_parity",
-      // bucketed-table staging writes on first invocation; the twin never
-      // writes (steady-state reads are symmetric, the 3-pass min usually
-      // lands there, but the stage can be charged to pass 1 in a cold run)
-      "bucketed_join_counts")
-    val symmetricSec = comparable.collect {
-      case (k, v) if !asymmetric.contains(k) => v
-    }.sum
+    val symmetricSec = summary.symmetricSec
     val asymSec = comparableSec - symmetricSec
     // Pinned comparator (BASELINE.md "Measured comparator"): the DuckDB
     // oracle-suite total on the identical sf0.1 parquet, 32 threads,
@@ -288,7 +313,7 @@ object Bench {
       s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
       s""""low_shuffle_partitions":${Tuning.lowShufflePartitions(spark)},""" +
       s""""floor_mode":${sys.env.contains("SPARK_GRAFT_BENCH_FLOOR")}"""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",$scaleJson,"comparable_sec":$comparableSec,"symmetric_sec":$symmetricSec,"asymmetric_sec":$asymSec,"jobchain_floor_sec":$jobChainSec$ivfSplitJson,"noncomparable":$noncompJson,"baseline_sec":$baselineSec,"baseline_quiet_sec":$baselineQuiet,"calib_quiet_sec":$calibQuiet,"calib_secs":$calibJson,"host_factor":$hostFactor,"vs_baseline":$ratio,"vs_baseline_quiet":${comparableSec / baselineQuiet},"vs_baseline_symmetric_quiet":$symRatioQuiet,"queries":$qs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec",$scaleJson,"comparable_sec":$comparableSec,"symmetric_sec":$symmetricSec,"asymmetric_sec":$asymSec,"jobchain_floor_sec":$jobChainSec$ivfSplitJson,"noncomparable":$noncompJson,"failed":$failedJson,"baseline_sec":$baselineSec,"baseline_quiet_sec":$baselineQuiet,"calib_quiet_sec":$calibQuiet,"calib_secs":$calibJson,"host_factor":$hostFactor,"vs_baseline":$ratio,"vs_baseline_quiet":${comparableSec / baselineQuiet},"vs_baseline_symmetric_quiet":$symRatioQuiet,"queries":$qs,"sf":"$sfDir"}"""
     // stdout goes through sbt's logger ("[info] "-prefixed), which breaks
     // line-oriented JSON parsing downstream — also write the result to a file
     // (override path via SPARK_GRAFT_BENCH_OUT; default = cwd/bench_out.json).
@@ -309,6 +334,6 @@ object Bench {
     // line and in bench_out.json.
     val slowest = results.toSeq.sortBy(-_._2).take(10)
       .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","comparable_sec":$comparableSec%.3f,"baseline_sec":$baselineSec%.3f,"host_factor":$hostFactor%.4f,"vs_baseline":$ratio%.4f,"vs_baseline_quiet":${comparableSec / baselineQuiet}%.4f,"slowest10":$slowest,"queries_full":"bench_out.json","sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","comparable_sec":$comparableSec%.3f,"baseline_sec":$baselineSec%.3f,"host_factor":$hostFactor%.4f,"vs_baseline":$ratio%.4f,"vs_baseline_quiet":${comparableSec / baselineQuiet}%.4f,"failed":$failedJson,"slowest10":$slowest,"queries_full":"bench_out.json","sf":"$sfDir"}""")
   }
 }

@@ -19,15 +19,18 @@ object Verify {
     // on one query); unset = full suite (what the driver runs)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
+    val attempted = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try Tuning.withTuned(spark, name) {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-      }
-      catch { case e: Throwable =>
+    val failed = attempted.flatMap { case (name, fn) =>
+      try {
+        Tuning.withTuned(spark, name) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        }
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(s"$name: ${e.getClass.getSimpleName}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -46,5 +49,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // closing line, after stop so a log tail keeps it; the exit code stays
+    // 0 either way
+    System.err.println(
+      s"[verify] ${attempted.size - failed.size}/${attempted.size} written, " +
+      s"${failed.size} failed" + (if (failed.isEmpty) "" else failed.mkString(": ", ", ", "")))
   }
 }

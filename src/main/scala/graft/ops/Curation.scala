@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.HashExpressions.md5Prefix
 
 /** Dataset-curation surface for a large-scale training-data pipeline:
   * deterministic train/val/test splitting, sequence packing into fixed
@@ -21,13 +22,16 @@ import org.apache.spark.sql.functions._
 object Curation {
 
   /** Deterministic uniform bucket in `[0, mod)` from a key column: the
-    * first 8 md5 hex chars as an integer (the repo-wide engine-portable
-    * hash convention — md5 hex is canonical on both Spark and DuckDB).
-    * Map-side, codegen'd, no shuffle.
+    * first 8 md5 hex digits of the key's string form, read as an integer,
+    * mod `mod` — the repo-wide engine-portable hash convention (md5 hex is
+    * canonical on both Spark and DuckDB, whose twin is
+    * [[graft.CatalogExtShared]]'s `sqlHashBucket`). Evaluated by the native
+    * [[org.apache.spark.sql.graft.Md5Prefix]] kernel: one digest and a
+    * shift per row, no strings. A NULL key yields a NULL bucket. Map-side,
+    * codegen'd, no shuffle.
     */
   def hashBucket(key: Column, mod: Int): Column =
-    conv(substring(md5(key.cast("string").cast("binary")), 1, 8), 16, 10)
-      .cast("long") % mod
+    md5Prefix(key, 8) % mod
 
   /** Train/val/test assignment by hash bucket of a stable key:
     * `[0,trainPct) → train`, `[trainPct,trainPct+valPct) → val`, rest →
@@ -455,8 +459,7 @@ object Curation {
   def stratifiedSample(docs: DataFrame, k: Int, groupCol: String = "lang",
                        keyCol: String = "doc_id"): DataFrame = {
     require(k > 0, s"sample size must be positive, got $k")
-    val h48 = conv(substring(md5(col(keyCol).cast("string").cast("binary")), 1, 12), 16, 10)
-      .cast("long")
+    val h48 = md5Prefix(col(keyCol), 12)
     docs.select(col(groupCol), col(keyCol).cast("long").as("__id"),
                 negate(h48.cast("double")).as("__s"))
       .groupBy(col(groupCol))
@@ -958,8 +961,7 @@ object Curation {
     */
   def weightedSampleNoReplace(docs: DataFrame, k: Int,
                               weight: Column): DataFrame = {
-    val h32 = conv(substring(md5(col("doc_id").cast("string").cast("binary")),
-                             1, 8), 16, 10).cast("long")
+    val h32 = md5Prefix(col("doc_id"), 8)
     val u = (h32 + lit(1L)).cast("double") / lit(4294967296.0)
     val keyNano = round(-log(u) / weight * lit(1e9)).cast("long")
     docs.select(col("doc_id"), weight.cast("long").as("weight"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.HashExpressions.md5Prefix
 
 /** Deduplication surface for a training-data pipeline over `documents`:
   * exact (hash groupBy), MinHash+LSH banding, SimHash, and exact n-gram
@@ -189,9 +190,7 @@ object Dedup {
   def simhashTable(docs: DataFrame, bits: Int): DataFrame = {
     require(bits >= 1 && bits <= 60, s"simhash bits must be in [1,60], got $bits")
     val hashed = TextAnalysis.explodeTokens(docs, spread = true)
-      .select(col("doc_id"),
-        conv(substring(md5(col("token").cast("binary")), 1, 15), 16, 10)
-          .cast("long").as("h"))
+      .select(col("doc_id"), md5Prefix(col("token"), 15).as("h"))
     val lanes = (0 until bits).map(b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1L)
         .otherwise(-1L)).as(s"s$b"))
@@ -285,7 +284,7 @@ object Dedup {
       toks,
       expr("array_repeat(0L, 32)"),
       (acc, t) => {
-        val h = conv(substring(md5(t.cast("binary")), 1, 8), 16, 10).cast("long")
+        val h = md5Prefix(t, 8)
         // bit b of h, via exact double pow (2^b ≤ 2^31, exactly representable)
         def bitMask(b: Column): Column = pow(lit(2.0), b).cast("long")
         zip_with(acc,
@@ -300,19 +299,17 @@ object Dedup {
   }
 
   /** SimHash-32 *table* (doc_id, simhash): explode tokens, hash each once
-    * (codegen'd md5 + conv), 32 conditional-sum lanes in one partial+final
-    * hash aggregate, pack the sign bits. The HOF column form above inlines
-    * the md5 subtree into every bit lane (32 evaluations per token,
-    * interpreted — observed 16 s vs ~1 s at sf0.1); this is the 100 TB path
-    * and the exact shape of the DuckDB oracle twin.
+    * (the codegen'd md5-prefix kernel), 32 conditional-sum lanes in one
+    * partial+final hash aggregate, pack the sign bits. The HOF column form
+    * above inlines the md5 subtree into every bit lane (32 evaluations per
+    * token, interpreted — observed 16 s vs ~1 s at sf0.1); this is the
+    * 100 TB path and the exact shape of the DuckDB oracle twin.
     */
   def simhash32Table(docs: DataFrame): DataFrame = {
     // spread (range-by-doc_id): parallel hash lanes locally, and the
     // per-doc aggregate + doc_id-ordered output then need no exchange
     val hashed = TextAnalysis.explodeTokens(docs, spread = true)
-      .select(col("doc_id"),
-        conv(substring(md5(col("token").cast("binary")), 1, 8), 16, 10)
-          .cast("long").as("h"))
+      .select(col("doc_id"), md5Prefix(col("token"), 8).as("h"))
     val lanes = (0 until 32).map(b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1L)
         .otherwise(-1L)).as(s"s$b"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.HashExpressions.md5Prefix
 
 /** Physical-layout optimization: space-filling-curve (Z-order) clustering,
   * the technique behind `OPTIMIZE ZORDER BY` in lakehouse table formats.
@@ -98,10 +99,9 @@ object Layout {
   def rendezvousMoveAudit(df: DataFrame, keyColName: String,
                           nFrom: Int, nTo: Int): DataFrame = {
     require(1 <= nFrom && nFrom <= nTo, s"need 1 <= nFrom <= nTo, got $nFrom/$nTo")
-    def h(s: Int) =
-      s"CAST(conv(substring(md5(CONCAT('rv$s:', CAST(__k AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-    def argmax(n: Int) = expr(
-      s"(-array_max(array(${(0 until n).map(s => s"struct(${h(s)} AS h, ${-s}L AS ns)").mkString(", ")})).ns)")
+    def h(s: Int) = md5Prefix(concat(lit(s"rv$s:"), col("__k").cast("string")), 15)
+    def argmax(n: Int) = -array_max(array((0 until n).map(s =>
+      struct(h(s).as("h"), lit(-s.toLong).as("ns"))): _*)).getField("ns")
     val cells = df.select(col(keyColName).as("__k")).filter(col("__k").isNotNull)
       .select(argmax(nFrom).as("sf"), argmax(nTo).as("st"))
       .groupBy("sf", "st").agg(count(lit(1)).as("n"))

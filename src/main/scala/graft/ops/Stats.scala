@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.HashExpressions.{bitLength64, md5Prefix}
 
 /** Grouped statistical fits with engine-portable determinism. Spark's own
   * `corr`/`covar_samp` aggregate doubles in partition order —
@@ -146,9 +147,10 @@ object Stats {
     * built openly so every step hash-matches a relational twin:
     *
     *  - per row: 60-bit md5-prefix hash → top-8-bit register index,
-    *    low-52-bit tail; rho = leading zeros of the tail + 1 via exact
-    *    string ops on `bin()` (no float log2 — its ulp behavior near
-    *    powers of two is not an engine contract);
+    *    low-52-bit tail; rho = leading zeros of the tail + 1 =
+    *    `53 − bit_length64(tail)`, exact integer arithmetic (no float
+    *    log2 — its ulp behavior near powers of two is not an engine
+    *    contract; the twin counts the base-2 digits of the tail);
     *  - registers: distinct keys (map-side partial dedup) → one hash per
     *    distinct key → `groupBy(idx).max(rho)` — a 256-row final shuffle
     *    (sketches also merge across shards by the same max). The
@@ -181,13 +183,11 @@ object Stats {
     // up front, matching COUNT(DISTINCT) semantics on both engines.
     val distinctKeys = df.select(col(keyColName).as("__k"))
       .filter(col("__k").isNotNull).distinct()
-    val hashed = distinctKeys.select(
-      expr("CAST(conv(substring(md5(CAST(__k AS STRING)), 1, 15), 16, 10) AS BIGINT)")
-        .as("__h"))
+    val hashed = distinctKeys.select(md5Prefix(col("__k"), 15).as("__h"))
     val tail = col("__h") % lit(1L << 52)
     val regs = hashed
       .select(expr(s"__h div ${1L << 52}").as("idx"),
-              (lit(53) - length(ltrim(lpad(bin(tail), 52, "0"), "0"))).as("rho"))
+              (lit(53) - bitLength64(tail)).as("rho"))
       .groupBy(col("idx"))
       .agg(max(col("rho")).as("reg"), count(lit(1)).as("nk"))
     val sketch = regs.agg(
@@ -233,22 +233,17 @@ object Stats {
     // groupBy below partial-aggregates each task down to ≤ shards·m
     // rows BEFORE the exchange — strictly less shuffle than a distinct
     // over (shard, key), whose exchange is ∝ distinct pairs (billions
-    // on a crawl) rather than ∝ tasks·shards·m. The md5 runs on every
-    // source row, but it is codegen'd map-side work that divides across
-    // executors. Interleaved A/B at sf0.1: 0.94/0.95 s here vs
-    // 0.92/1.18 s distinct-first — a wash at 1×; the shuffle shape is
-    // the reason to prefer this form
+    // on a crawl) rather than ∝ tasks·shards·m. The hash runs on every
+    // source row, so its per-row constant is the operator's whole map-side
+    // cost — hence the native kernels: one digest and two integer ops per
+    // row, no strings
     val hashed = df
       .filter(col(keyColName).isNotNull)
       .select(col(shardColName).as("__shard"),
-              expr(s"CAST(conv(substring(md5(CAST(`$keyColName` AS STRING)), 1, 15), 16, 10) AS BIGINT)")
-                .as("__h"))
+              md5Prefix(col(keyColName), 15).as("__h"))
     val tail = col("__h") % lit(1L << 52)
-    // rho = 53 − bit_length(tail) (zero-guarded): `bin()` without the
-    // lpad/ltrim string round-trip — bin(tail) for tail > 0 has exactly
-    // bit_length characters
-    val rho = when(tail === 0L, lit(53))
-      .otherwise(lit(53) - length(bin(tail)))
+    // rho = 53 − bit_length(tail), 53 for a zero tail — no guard needed
+    val rho = lit(53) - bitLength64(tail)
     // ≤ shards·m rows — the artifact a real pipeline persists per shard.
     // Single consumer chain (round-13): the shard count rides the idx-merge
     // as a collect_set (≤ shards strings per register) and folds into the
@@ -309,7 +304,7 @@ object Stats {
                    d: Int = 4, w: Int = 1024, k: Int = 20): DataFrame = {
     val tok = TextAnalysis.explodeTokens(docs, textCol).select(col("token"))
     def bucket(r: Int): Column =
-      expr(s"CAST(conv(substring(md5(concat('cms$r:', token)), 1, 12), 16, 10) AS BIGINT) % $w")
+      md5Prefix(concat(lit(s"cms$r:"), col("token")), 12) % w
     // combine-then-sketch: tokenize ONCE into the exact vocabulary, then
     // build the counter matrix from per-token counts (sum-weighted buckets
     // ≡ counting the raw stream — the counters are identical integers).
@@ -363,10 +358,7 @@ object Stats {
                  k: Int = 256): DataFrame = {
     def keys(df: DataFrame, a: Int, b: Int) = df
       .select(col(keyColName).as("__k")).filter(col("__k").isNotNull).distinct()
-      .select(
-        expr("CAST(conv(substring(md5(CAST(__k AS STRING)), 1, 15), 16, 10) AS BIGINT)")
-          .as("__h"),
-        lit(a).as("a"), lit(b).as("b"))
+      .select(md5Prefix(col("__k"), 15).as("__h"), lit(a).as("a"), lit(b).as("b"))
     kmvFromMembership(
       keys(dfA, 1, 0).unionAll(keys(dfB, 0, 1))
         .groupBy(col("__h"))
@@ -386,10 +378,7 @@ object Stats {
         .groupBy(col(keyColName).as("__k"))
         .agg(max(when(condA, 1).otherwise(0)).as("in_a"),
              max(when(condB, 1).otherwise(0)).as("in_b"))
-        .select(
-          expr("CAST(conv(substring(md5(CAST(__k AS STRING)), 1, 15), 16, 10) AS BIGINT)")
-            .as("__h"),
-          col("in_a"), col("in_b")),
+        .select(md5Prefix(col("__k"), 15).as("__h"), col("in_a"), col("in_b")),
       k)
 
   /** Shared KMV tail over the per-key membership relation
@@ -476,8 +465,7 @@ object Stats {
     val base = df.select(shardCol.as("__shard"), rowKey.as("__rk"),
                          valueCol.cast("long").as("__v"))
     // the kmv/bloom md5 hash discipline: 60-bit, engine-portable
-    val h = expr(
-      "CAST(conv(substring(md5(CAST(__rk AS STRING)), 1, 15), 16, 10) AS BIGINT)")
+    val h = md5Prefix(col("__rk"), 15)
     val packed = shiftright(h, 28) * lit(2147483648L) + col("__v")
     def tk(c: Column) =
       org.apache.spark.sql.graft.TopKPairsAgg.topkPairs(k, c, lit(0.0))
@@ -628,7 +616,7 @@ object Stats {
                           m: Int = 65536, k: Int = 4): DataFrame = {
     require(m % 64 == 0 && k >= 1, s"need 64 | m and k >= 1, got m=$m k=$k")
     def bitExpr(r: Int, of: String) =
-      expr(s"CAST(conv(substring(md5(CONCAT('bf$r:', CAST($of AS STRING))), 1, 15), 16, 10) AS BIGINT) % $m")
+      md5Prefix(concat(lit(s"bf$r:"), col(of).cast("string")), 15) % m
     val buildKeys = build.select(col(keyColName).as("__k"))
       .filter(col("__k").isNotNull).distinct()
     // ONE job for the bit set AND the key count (round 14): the count used
@@ -1619,10 +1607,8 @@ object Stats {
   def bootstrapMeanCi(orders: DataFrame, b: Int = 201): DataFrame = {
     require((b - 1) % 40 == 0, "need exact percentile ranks: (b-1) % 40 == 0")
     val Seq(t0, t1, t2, t3, t4) = PoissonThresholds
-    val h32 = conv(substring(md5(concat(col("day").cast("string"), lit("#"),
-                                        col("b").cast("string"))
-                                   .cast("binary")), 1, 8), 16, 10)
-      .cast("long")
+    val h32 = md5Prefix(concat(col("day").cast("string"), lit("#"),
+                               col("b").cast("string")), 8)
     val w = when(h32 < t0, 0L).when(h32 < t1, 1L).when(h32 < t2, 2L)
       .when(h32 < t3, 3L).when(h32 < t4, 4L).otherwise(5L)
     val means = dailyRevenue(orders)
